@@ -8,9 +8,12 @@ unparseable statements are skipped silently (:69-71).
 Implementation: sqlglot if importable (not in the base image), else a
 regex-based extractor that handles the log-statement shapes the workload
 analyzer sees (SELECT ... FROM a JOIN b / comma lists, INSERT INTO, UPDATE,
-DELETE FROM, CREATE TABLE, and non-correlated subqueries). Exposed to Spark
-as one Arrow-batched pandas UDF — the only Python function in the engine's
-hot path, and it runs on metadata-scale log data.
+DELETE FROM, CREATE TABLE, and non-correlated subqueries).
+
+`extract_table_refs` is the one per-statement kernel of both workload
+paths: `workload.apply_workload` calls it directly in its driver-side scan
+of the log, and the `fn_sql_tablelist` operator runs it inside Spark as an
+Arrow-batched pandas UDF (`sql_tablelist_udf`).
 """
 
 from __future__ import annotations

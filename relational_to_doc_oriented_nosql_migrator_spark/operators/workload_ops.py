@@ -1,8 +1,12 @@
 """Workload-analyzer operators (SURVEY §2.2, §2.4, §2.8) with DuckDB oracles.
 
-The Spark side runs the real pipeline (workload.py: regexp tokenizer ->
-statement filter -> pandas-UDF table-ref extraction -> weighted aggregation).
-The oracle reimplements the same semantics independently in DuckDB SQL
+Each operator is one step of the log reduction as a Spark DataFrame
+(workload.py's builders: regexp tokenizer -> statement filter -> pandas-UDF
+table-ref extraction -> weighted aggregation), run on the fixture logs
+below. A migration does not run these frames: `workload.apply_workload`
+reduces its log in one driver-side scan with the same regexes and parser,
+and tests/test_workload_driver_parity.py holds the two equal. The oracle
+reimplements the same semantics independently in DuckDB SQL
 (gaps-and-islands entry reconstruction + regexp ref extraction), so a
 hash match is a genuine cross-engine check, not a tautology.
 """

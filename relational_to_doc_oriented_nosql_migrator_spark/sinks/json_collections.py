@@ -586,7 +586,7 @@ def write_json_collections(
             )
     _mkdirs(out_dir)
     wrote: dict[str, bool] = {}
-    plain: list[tuple[str, DataFrame, str]] = []
+    pending: list[tuple[str, DataFrame, str]] = []
     for name, df in collections.items():
         df = _replanned(df)
         target = f"{out_dir.rstrip('/')}/{name}"
@@ -598,7 +598,13 @@ def write_json_collections(
             if counts is not None and n_docs:
                 counts[name] = n_docs
             continue
-        if single_file:
+        pending.append((name, df, target))
+    if pending:
+        from concurrent.futures import ThreadPoolExecutor
+
+        from pyspark import inheritable_thread_target
+
+        def _write_single_file(item):
             # Parity mode: one JSON array per collection file, like
             # the reference's JSON.stringify of the whole collection.
             # One action per collection; the empty check falls out of
@@ -608,22 +614,16 @@ def write_json_collections(
             # point at a real corpus. (It still runs under the
             # streaming-aggregation confs: the nesting plan executes
             # inside the collect, with the same allocation profile.)
-            with _sort_based_collects(df.sparkSession):
-                docs = [json.loads(r) for r in df.toJSON().collect()]
+            name, df, target = item
+            docs = [json.loads(r) for r in df.toJSON().collect()]
             if not docs:
                 # `filter_nonempty_collection` (reference
                 # server/WriteToFile.js:9-11): empty collections
                 # dropped.
-                continue
-            wrote[name] = True
-            if counts is not None:
-                counts[name] = len(docs)
+                return name, False, 0
             with open(f"{target}.json", "w") as fh:
                 json.dump(docs, fh, default=str)
-        else:
-            plain.append((name, df, target))
-    if plain:
-        from concurrent.futures import ThreadPoolExecutor
+            return name, True, len(docs)
 
         def _write_one(item):
             name, df, target = item
@@ -653,16 +653,26 @@ def write_json_collections(
             return name, True, (int(obs.get["n"]) if obs is not None
                                 else 0)
 
-        # The write JOBS run concurrently from driver threads: each
-        # flat collection's write parallelism is capped by its input
-        # split count, so serial writes leave most cores idle at every
-        # job's stage tail — concurrent submission makes the wall the
-        # max job, not the sum (the scoped confs are session-wide, so
-        # one context manager brackets all of them; plan-time conf
-        # reads happen inside it).
-        with _sort_based_collects(plain[0][1].sparkSession):
-            with ThreadPoolExecutor(min(4, len(plain))) as pool:
-                for name, ok, n_docs in pool.map(_write_one, plain):
+        # The write (or collect) JOBS run concurrently from driver
+        # threads: each collection's job parallelism is capped by its
+        # input split count, so serial jobs leave most cores idle at
+        # every job's stage tail — concurrent submission makes the wall
+        # the max job, not the sum (the scoped confs are session-wide,
+        # so one context manager brackets all of them; plan-time conf
+        # reads happen inside it). Each task is wrapped on its own so
+        # it runs under its own copy of the caller's local properties
+        # (job group, description): Spark's SQL execution writes its
+        # execution id into them, so one shared copy would be raced.
+        write = _write_single_file if single_file else _write_one
+        spark = pending[0][1].sparkSession
+        with _sort_based_collects(spark):
+            with ThreadPoolExecutor(min(4, len(pending))) as pool:
+                futures = [
+                    pool.submit(inheritable_thread_target(spark)(write), item)
+                    for item in pending
+                ]
+                for future in futures:
+                    name, ok, n_docs = future.result()
                     wrote[name] = ok
                     if counts is not None and ok:
                         counts[name] = n_docs
@@ -670,8 +680,12 @@ def write_json_collections(
     if zip_path:
         zip_abs = os.path.abspath(zip_path)
         with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:
-            for root, _dirs, files in os.walk(out_dir):
-                for f in files:
+            for root, dirs, files in os.walk(out_dir):
+                # Sorted: the concurrent writers create files in no
+                # fixed order, and the archive's entry order should not
+                # depend on it.
+                dirs.sort()
+                for f in sorted(files):
                     full = os.path.join(root, f)
                     # Never zip the archive into itself (zip_path may live
                     # inside out_dir, like the reference's results/ dir).

@@ -14,8 +14,3 @@ from pyspark.sql import DataFrame, SparkSession
 def read_log_text(spark: SparkSession, path: str) -> DataFrame:
     """One row per file with the full text in column `value`."""
     return spark.read.option("wholetext", True).text(path)
-
-
-def log_text_df(spark: SparkSession, content: str) -> DataFrame:
-    """Wrap an in-memory log string as a single-row DataFrame (tests)."""
-    return spark.createDataFrame([(content,)], "value string")

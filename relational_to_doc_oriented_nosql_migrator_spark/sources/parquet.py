@@ -145,12 +145,19 @@ def load_tables(
 ) -> dict[str, DataFrame]:
     """Load all tables concurrently: each spark.read.parquet is a driver
     round trip for schema discovery (~250ms), so a serial loop costs
-    len(names) x that latency before any query runs."""
+    len(names) x that latency before any query runs. Each load is
+    wrapped on its own, so its schema-discovery job runs under its own
+    copy of the caller's job group and description."""
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
 
     with ThreadPoolExecutor(max_workers=min(8, len(names))) as pool:
         futures = {
-            name: pool.submit(load_table, spark, sf_dir, name)
+            name: pool.submit(
+                inheritable_thread_target(spark)(load_table),
+                spark, sf_dir, name,
+            )
             for name in names
         }
         return {name: f.result() for name, f in futures.items()}
