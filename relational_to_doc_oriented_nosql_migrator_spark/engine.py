@@ -18,68 +18,40 @@ from relational_to_doc_oriented_nosql_migrator_spark.plans import (
     Catalog,
     convert_schema,
     materialize,
-    tpch_catalog,
 )
-from relational_to_doc_oriented_nosql_migrator_spark.sources import (
-    ALL_TABLES,
-    load_tables,
+from relational_to_doc_oriented_nosql_migrator_spark.sources import load_tables
+from relational_to_doc_oriented_nosql_migrator_spark.sources.parquet import (
+    footer_catalog,
 )
 from relational_to_doc_oriented_nosql_migrator_spark import workload as workload_mod
 
 
-def _parquet_row_count(sf_dir: str, name: str) -> int | None:
-    """Row count straight from the parquet footer (no Spark job): the
-    catalog-metadata path a warehouse uses. Returns None when footers are
-    unavailable (non-parquet layout) -> fall back to df.count()."""
-    import glob
-    import os
-
-    try:
-        import pyarrow.parquet as pq
-
-        pattern = os.path.join(sf_dir, f"{name}.parquet")
-        paths = glob.glob(pattern) or glob.glob(
-            os.path.join(pattern, "*.parquet")
-        )
-        if not paths:
-            return None
-        return sum(pq.read_metadata(p).num_rows for p in paths)
-    except Exception:
-        return None
-
-
 def build_testdata_catalog(
-    spark: SparkSession, sf_dir: str, tables: dict[str, DataFrame] | None = None
+    spark: SparkSession, sf_dir: str
 ) -> tuple[Catalog, dict[str, DataFrame]]:
     """Catalog for the driver testdata: schemas + row counts from parquet
-    footers (one metadata read per table, no scan jobs — `agg_count_star`
-    remains the query-surface equivalent), FK graph from plans/catalog.py."""
-    tables = tables or load_tables(spark, sf_dir, ALL_TABLES)
-    columns = {name: df.columns for name, df in tables.items()}
-    counts = {}
-    for name, df in tables.items():
-        footer = _parquet_row_count(sf_dir, name)
-        counts[name] = footer if footer is not None else df.count()
-    return tpch_catalog(columns, counts), tables
+    footers (no scan jobs — `agg_count_star` remains the query-surface
+    equivalent), FK graph from plans/catalog.py; plus the lazy tables."""
+    catalog = footer_catalog(sf_dir)
+    return catalog, load_tables(spark, sf_dir, tuple(catalog.tables))
 
 
-def _pipeline(
+def _plan_and_materialize(
     spark: SparkSession,
-    sf_dir: str,
+    catalog: Catalog,
+    tables: dict[str, DataFrame],
     log_content: str | None,
     log_dialect: str,
     normalize_dates: bool,
 ):
-    """Shared catalog -> plan -> nested-frames prefix of migrate() and
-    migrate_streamed() (one owner, so the streamed path can never
-    silently diverge from the plain one)."""
-    catalog, tables = build_testdata_catalog(spark, sf_dir)
+    """The migration tail every entry point shares: fold the optional
+    query log into the catalog's workload stats, plan embed-vs-reference,
+    and build the nested frames. Returns (plan, collections)."""
     if log_content:
         workload_mod.apply_workload(spark, catalog, log_content, log_dialect)
     plan = convert_schema(catalog)
-    collections = materialize(tables, catalog, plan,
-                              normalize_dates=normalize_dates)
-    return catalog, tables, plan, collections
+    return plan, materialize(tables, catalog, plan,
+                             normalize_dates=normalize_dates)
 
 
 def migrate(
@@ -90,8 +62,9 @@ def migrate(
     normalize_dates: bool = True,
 ) -> dict[str, DataFrame]:
     """Full pipeline: returns {root collection name: nested DataFrame}."""
-    _catalog, _tables, _plan, collections = _pipeline(
-        spark, sf_dir, log_content, log_dialect, normalize_dates
+    catalog, tables = build_testdata_catalog(spark, sf_dir)
+    _plan, collections = _plan_and_materialize(
+        spark, catalog, tables, log_content, log_dialect, normalize_dates
     )
     return collections
 
@@ -106,7 +79,7 @@ def migrate_streamed(
 ):
     """migrate() plus the per-root streamed-assembly pieces for HEAVY
     roots (plans/nesting.stream_plan — tiny root cardinality over a
-    subtree past HEAVY_ROOT_SUBTREE_ROWS, r08 verdict #2): returns
+    subtree past HEAVY_ROOT_SUBTREE_ROWS): returns
     (collections, streamed) for sinks.write_json_collections. The
     collections dict is the ordinary lazy nested frames — for streamed
     roots the sink uses them only for their schema, never executing the
@@ -117,8 +90,9 @@ def migrate_streamed(
         stream_plan,
     )
 
-    catalog, tables, plan, collections = _pipeline(
-        spark, sf_dir, log_content, log_dialect, normalize_dates
+    catalog, tables = build_testdata_catalog(spark, sf_dir)
+    plan, collections = _plan_and_materialize(
+        spark, catalog, tables, log_content, log_dialect, normalize_dates
     )
     thr = HEAVY_ROOT_SUBTREE_ROWS if threshold is None else threshold
     streamed = {
@@ -157,11 +131,9 @@ def migrate_from_dump(
     )
 
     _db, tables, catalog = import_sql_dump(spark, sql_text)
-    if log_content:
-        workload_mod.apply_workload(spark, catalog, log_content, log_dialect)
-    plan = convert_schema(catalog)
-    collections = materialize(tables, catalog, plan,
-                              normalize_dates=normalize_dates)
+    plan, collections = _plan_and_materialize(
+        spark, catalog, tables, log_content, log_dialect, normalize_dates
+    )
     if return_plan:
         return collections, catalog, plan
     return collections
@@ -237,7 +209,7 @@ def migrate_from_jdbc(
                 .load()
             )
         tables[t.name] = df
-    if log_content:
-        workload_mod.apply_workload(spark, catalog, log_content, log_dialect)
-    plan = convert_schema(catalog)
-    return materialize(tables, catalog, plan, normalize_dates=normalize_dates)
+    _plan, collections = _plan_and_materialize(
+        spark, catalog, tables, log_content, log_dialect, normalize_dates
+    )
+    return collections

@@ -8,10 +8,17 @@ scan, so downstream operators never pay for `SELECT *` unless they use it.
 
 from __future__ import annotations
 
+import glob
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from relational_to_doc_oriented_nosql_migrator_spark.plans.catalog import (
+    TPCH_FOREIGN_KEYS,
+    Catalog,
+    tpch_catalog,
+)
 
 # Relational star schema (FK graph in plans/catalog.py).
 TPCH_TABLES = (
@@ -34,8 +41,9 @@ def ensure_runtime_confs(spark: SparkSession) -> None:
     factory) because the driver calls `entry()`/`queries()` with its own
     vanilla SparkSession:
 
-    - nanosAsLong: the testdata stores TIMESTAMP(NANOS), which Spark 4.1
-      reads as correct TIMESTAMP_NTZ under this flag and rejects outright
+    - nanosAsLong: inputs may store TIMESTAMP(NANOS), which Spark 4.1
+      reads as LONG nanos under this flag (the loaders turn those back
+      into timestamps, see _nanos_timestamp_columns) and rejects outright
       without it.
     - AQE + partition coalescing: the nesting DAG chains several joins and
       groupBys; with a static 200-partition shuffle on a vanilla session the
@@ -58,7 +66,7 @@ def ensure_runtime_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     # APPEND to any exclusions the embedding application already set —
     # this runs on every table load, so a blind overwrite would
-    # permanently clobber user-configured rule exclusions (r05 ADVICE).
+    # permanently clobber user-configured rule exclusions.
     _infer = "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
     _existing = [
         r.strip()
@@ -84,44 +92,89 @@ def ensure_runtime_confs(spark: SparkSession) -> None:
     ensure_codegen_confs(spark)
 
 
+def parquet_files(path: str) -> list[str]:
+    """The parquet files behind a path: the sorted matches of ``path`` as a
+    glob, with each match that is a directory (a table written as part
+    files, the layout the scale generator writes) replaced by its sorted
+    ``*.parquet`` children. Covers a single file, a part-file directory, a
+    glob, and a glob that matches directories. Inside a directory only
+    ``*.parquet`` files count, so markers such as ``_SUCCESS`` are
+    skipped. Empty when nothing matches."""
+    files: list[str] = []
+    for match in sorted(glob.glob(path)):
+        if os.path.isdir(match):
+            files += sorted(glob.glob(os.path.join(match, "*.parquet")))
+        else:
+            files.append(match)
+    return files
+
+
+def parquet_paths(sf_dir: str, name: str) -> list[str]:
+    """The parquet files of table ``name`` under ``sf_dir``: a single
+    ``<name>.parquet`` file or a ``<name>.parquet/`` directory of part
+    files. The ONE copy of this layout rule (through ``parquet_files``):
+    the footer catalog, the footer-metadata guards and gates, and the
+    loaders' timestamp detection all resolve files here. Raises
+    FileNotFoundError naming the table when there are none."""
+    pattern = os.path.join(sf_dir, f"{name}.parquet")
+    paths = parquet_files(pattern)
+    if not paths:
+        raise FileNotFoundError(
+            f"no parquet for table {name!r} at {pattern}"
+            " (expected a file, or a directory of part-*.parquet files)"
+        )
+    return paths
+
+
+def footer_rows(sf_dir: str, name: str) -> int:
+    """Table row count from parquet FOOTER metadata only — no Spark job
+    (the planner's catalog trick)."""
+    import pyarrow.parquet as pq
+
+    return sum(
+        pq.read_metadata(p).num_rows for p in parquet_paths(sf_dir, name)
+    )
+
+
+def footer_catalog(sf_dir: str) -> Catalog:
+    """The testdata catalog from parquet footers alone: column names from
+    the first file's schema, row counts summed over every file's footer,
+    PKs and the FK graph from plans/catalog.py. Submits no Spark job —
+    the planner is metadata-scale and must not scan data."""
+    import pyarrow.parquet as pq
+
+    columns = {
+        name: pq.read_schema(parquet_paths(sf_dir, name)[0]).names
+        for name in TPCH_FOREIGN_KEYS
+    }
+    counts = {name: footer_rows(sf_dir, name) for name in TPCH_FOREIGN_KEYS}
+    return tpch_catalog(columns, counts)
+
+
 def _nanos_timestamp_columns(path: str) -> list[str]:
     """Columns stored as parquet TIMESTAMP(NANOS): under nanosAsLong Spark
     surfaces them as LONG nanos-since-epoch; detect from the footer so we
     can restore proper (micros) timestamps. ms/us timestamp columns are
     unaffected and read natively.
 
-    Accepts a single file, a directory of part files (the production
-    layout), or a glob — the footer is read from the first data file."""
-    try:
-        import glob as _glob
-        import os
+    ``path`` is anything ``parquet_files`` resolves (a file, a part-file
+    directory, or a glob); the footer is read from the first data file.
+    No file, or an unreadable footer, means no nanos columns."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        if os.path.isdir(path):
-            candidates = sorted(
-                p
-                for p in _glob.glob(os.path.join(path, "**", "*"),
-                                    recursive=True)
-                if os.path.isfile(p) and not os.path.basename(p).startswith(
-                    ("_", ".")
-                )
-            )
-        elif any(ch in path for ch in "*?["):
-            candidates = sorted(_glob.glob(path))
-        else:
-            candidates = [path]
-        if not candidates:
-            return []
-        schema = pq.read_schema(candidates[0])
-        return [
-            f.name
-            for f in schema
-            if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
-        ]
-    except Exception:
+    files = parquet_files(path)
+    if not files:
         return []
+    try:
+        schema = pq.read_schema(files[0])
+    except (OSError, pa.ArrowException):
+        return []
+    return [
+        f.name
+        for f in schema
+        if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+    ]
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

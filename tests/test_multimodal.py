@@ -334,20 +334,48 @@ def test_frame_sample_covers_all_docs(spark):
 
 
 def test_directory_layout_restores_nanos_timestamps(spark, tmp_path):
-    """Production tables are DIRECTORIES of part files; footer detection
-    must resolve a data file inside, so nanos timestamps still surface as
-    timestamps, not raw longs."""
-    import shutil
+    """Production tables are DIRECTORIES of part files (plus markers such
+    as _SUCCESS); footer detection must resolve a data file inside, so a
+    TIMESTAMP(NANOS) column surfaces as a micros timestamp_ntz, not as the
+    raw longs Spark reads under nanosAsLong."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    d = str(tmp_path)
-    os.makedirs(os.path.join(d, "events.parquet"))
-    shutil.copy(
-        os.path.join(SF0001, "events.parquet"),
-        os.path.join(d, "events.parquet", "part-00000.parquet"),
-    )
     from relational_to_doc_oriented_nosql_migrator_spark.sources.parquet import (
         load_table,
     )
 
+    events = pq.read_table(os.path.join(SF0001, "events.parquet"))
+    micros = events.column("ts")
+    # Sub-microsecond digits on every row, so truncation is observable.
+    nanos = pa.array(
+        [v * 1000 + 1 + i % 999
+         for i, v in enumerate(micros.cast(pa.int64()).to_pylist())],
+        pa.timestamp("ns"),
+    )
+    events = events.set_column(
+        events.schema.get_field_index("ts"), "ts", nanos
+    )
+    d = str(tmp_path)
+    table_dir = os.path.join(d, "events.parquet")
+    os.makedirs(table_dir)
+    half = events.num_rows // 2
+    for i, part in enumerate((events.slice(0, half), events.slice(half))):
+        pq.write_table(
+            part, os.path.join(table_dir, f"part-{i:05d}.parquet"),
+            version="2.6",
+        )
+    open(os.path.join(table_dir, "_SUCCESS"), "w").close()
+    assert pq.read_schema(
+        os.path.join(table_dir, "part-00000.parquet")
+    ).field("ts").type == pa.timestamp("ns")
+
     df = load_table(spark, d, "events")
-    assert dict(df.dtypes)["ts"].startswith("timestamp")
+    assert dict(df.dtypes)["ts"] == "timestamp_ntz"
+    got = {
+        r.event_id: r.ts for r in df.select("event_id", "ts").collect()
+    }
+    want = dict(zip(
+        events.column("event_id").to_pylist(), micros.to_pylist()
+    ))
+    assert got == want

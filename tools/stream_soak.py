@@ -54,7 +54,7 @@ def build_slices(sf_dir: str, n_slices: int, out_dir: str) -> int:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from relational_to_doc_oriented_nosql_migrator_spark.operators.common import (
+    from relational_to_doc_oriented_nosql_migrator_spark.sources.parquet import (
         parquet_paths,
     )
 
